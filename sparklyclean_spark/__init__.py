@@ -12,7 +12,7 @@ ML-based duplicate classification.
 Design stance (SURVEY.md §7): every operator is a pure function
 ``(DataFrame, config) -> DataFrame`` declared with the DataFrame API
 so Catalyst/AQE pick the physical strategy; randomness derives from
-``xxhash64`` of stable keys; Python runs only driver-side O(#blocks)
+``xxhash64`` of stable keys; Python runs only driver-side O(k log k)
 planning math and Arrow-batched pandas UDFs where DataFrame algebra
 genuinely cannot express the semantics.
 """

@@ -110,11 +110,21 @@ def apply_dup_classifier(
     features_col: str = "features",
     id_cols: tuple[str, str] = ("id1", "id2"),
 ) -> DataFrame:
-    """Score pairs; returns (id1, id2, prediction) ordered by prediction
-    (reference output shape, ``ApplyDupClassifier.scala:74-83``)."""
+    """Score pairs; returns (id1, id2, prediction) ordered by
+    (prediction, id1, id2) (reference output shape,
+    ``ApplyDupClassifier.scala:74-83``).
+
+    The narrow scored projection is hash-exchanged on the ids before
+    the global sort. A range sort first runs a sampling job over its
+    input; fed straight from scoring, that job would re-run the pair
+    join, the comparators and the GBT just to draw sort bounds. Behind
+    the exchange, AQE materialises the scored pairs once as a shuffle
+    stage and the sampler reads that stage instead."""
     scored = model.transform(_vectorize(unlabeled, features_col))
-    return scored.select(*id_cols, F.col("prediction").cast("double")).orderBy(
-        "prediction", *id_cols
+    return (
+        scored.select(*id_cols, F.col("prediction").cast("double"))
+        .repartition(*id_cols)
+        .orderBy("prediction", *id_cols)
     )
 
 

@@ -5,14 +5,20 @@ The distributed-deduplication scheme of Chu, Ilyas & Koutris (VLDB
 ``DisDedupMapper.scala``, ``DisDedupReducer.scala``), re-expressed
 Spark-first:
 
-* Block statistics = one DataFrame aggregation (reference A1-A4,
-  ``Setup.scala:31-57``).
-* Driver-side planning is O(#heavy blocks) only: blocks whose
-  pairwise workload exceeds the random-assignment threshold
-  ``tau = W/(3k ln k)`` (at most ~3k·ln k of them) are collected and
-  planned; the long tail is assigned DISTRIBUTED-side via hash —
-  unlike the reference, which collects every block to the driver
+* Block statistics = one DataFrame aggregation read by ONE action
+  (reference A1-A4, ``Setup.scala:31-57``): the total pair workload W
+  and the block count are ``observe``d while the same job collects
+  the ⌈3k ln k⌉ largest blocks.
+* Driver-side planning is O(k log k): blocks whose pairwise workload
+  exceeds the random-assignment threshold ``tau = W/(3k ln k)`` are
+  planned on the driver. More than 3k ln k blocks above tau would sum
+  to more than W, so every heavy block is among the collected top
+  ⌈3k ln k⌉ and the filter runs on the driver (``heavy_blocks``). The
+  long tail is assigned DISTRIBUTED-side via hash — unlike the
+  reference, which collects every block to the driver
   (``Setup.scala:68-89``), this keeps the driver O(k log k) at 100 TB.
+* The heavy-block assignment table goes to the executors as a
+  broadcast built through Arrow, so the planner runs no Python worker.
 * Triangle fan-out (``DisDedupMapper.scala:13-51``): a block given
   ``k_i = l(l+1)/2`` cells replicates each row to ``l`` cells of an
   upper-triangular l×l grid; every anchor pair meets in exactly one
@@ -40,10 +46,11 @@ import math
 import random
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparklyclean_spark.cache import tracked_persist
+from sparklyclean_spark.observe import observed_metrics
 from sparklyclean_spark.operators.dedup.blocking import (
     BlockingRule,
     bv_col,
@@ -62,6 +69,35 @@ def triangle_side(k_i: int) -> int:
     while l * (l + 1) // 2 > k_i:
         l -= 1
     return max(l, 1)
+
+
+def heavy_threshold(total_workload: int, k: int) -> float:
+    """tau: blocks with more pair work than this are planned on the
+    driver; the rest are hash-assigned (``W/(3k ln k)``, or ``W/k``
+    below k = 3 where ``ln k`` is too small to bound anything)."""
+    if k >= 3:
+        return total_workload / (3.0 * k * math.log(k))
+    return total_workload / k if k else float("inf")
+
+
+def heavy_cap(k: int) -> int:
+    """How many of the largest blocks to collect so that every block
+    above ``heavy_threshold`` is among them: c blocks above tau carry
+    more than c·tau of W's pair work, so c < W/tau, which is 3k ln k
+    (k when k < 3). Never 0, so the collecting action always runs
+    and fires its observation."""
+    return max(k, math.ceil(3 * k * math.log(k)))
+
+
+def heavy_blocks(
+    top: list[tuple[int, str, int]], total_workload: int, k: int
+) -> list[tuple[int, str, int]]:
+    """The heavy blocks: those of ``top`` — the ``heavy_cap(k)``
+    largest [(bk, bv, n_rows)], ties at the cut broken arbitrarily —
+    whose workload n(n-1)/2 exceeds ``heavy_threshold``. Equals the
+    same filter over ALL blocks (see ``heavy_cap``)."""
+    tau = heavy_threshold(total_workload, k)
+    return [(bk, bv, n) for bk, bv, n in top if n * (n - 1) // 2 > tau]
 
 
 @dataclass
@@ -96,8 +132,7 @@ def plan_assignment(
     sorted-block order so the plan is reproducible (fixes G5).
     """
     w_per_reducer = total_workload / k if k else float("inf")
-    tau = total_workload / (3.0 * k * math.log(k)) if k >= 3 else w_per_reducer
-    plan = DisDedupPlan(k, total_workload, w_per_reducer, tau)
+    plan = DisDedupPlan(k, total_workload, w_per_reducer, heavy_threshold(total_workload, k))
     if not heavy:
         return plan
 
@@ -139,6 +174,21 @@ def plan_assignment(
     for i, kv in enumerate(single_keys):
         plan.single_det[kv] = rids[(pos + i) % k]
     return plan
+
+
+def _assignment_table(spark: SparkSession, plan: DisDedupPlan) -> DataFrame:
+    """The plan's heavy blocks as (bk, bv, l_, rids) rows, built from
+    pandas on the Arrow path: its lineage is JVM-only. A Python list
+    would go through ``parallelize`` and run Python-worker tasks for a
+    table of a few rows."""
+    import pandas as pd
+
+    rows = [(bk, bv, l, rids) for (bk, bv), (l, rids) in plan.multi.items()]
+    rows += [(bk, bv, 1, [rid]) for (bk, bv), rid in plan.single_det.items()]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["bk", "bv", "l_", "rids"]),
+        "bk int, bv string, l_ int, rids array<int>",
+    )
 
 
 def _fanout(blocked: DataFrame, seed: int) -> DataFrame:
@@ -208,12 +258,24 @@ def candidate_pairs_disdedup(
         base = base.repartition(k)
     base = tracked_persist(base)
 
-    # --- stats job: block sizes; only heavy blocks reach the driver.
-    stats = base.groupBy("bk", "bv").agg(F.count(F.lit(1)).alias("n")).where("n >= 2")
-    totals = stats.select(
-        F.sum(F.expr("n * (n - 1) div 2")).alias("w"), F.count(F.lit(1)).alias("blocks")
-    ).collect()[0]
-    total_w = int(totals["w"] or 0)
+    # --- stats job: one action. W and the block count are observed
+    # while it collects the heavy_cap(k) largest blocks, which hold
+    # every heavy block; the filter by tau then runs on the driver.
+    obs = Observation("disdedup_block_stats")
+    top = (
+        base.groupBy("bk", "bv")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where("n >= 2")
+        .observe(
+            obs,
+            F.sum(F.expr("n * (n - 1) div 2")).alias("w"),
+            F.count(F.lit(1)).alias("blocks"),
+        )
+        .orderBy(F.desc("n"))
+        .limit(heavy_cap(k))
+        .collect()
+    )
+    total_w = int(observed_metrics(obs)["w"] or 0)
     if total_w == 0:
         # Schema-faithful empty result: column types derived from the
         # input (id/payload keep their real types, cell-stats columns
@@ -241,22 +303,13 @@ def candidate_pairs_disdedup(
         if with_cell_stats:
             out += ["rid", "cell", "bv"]
         return empty.select(*out)
-    w_per_reducer = total_w / k
-    tau = total_w / (3.0 * k * math.log(k)) if k >= 3 else w_per_reducer
-    heavy = [
-        (r["bk"], r["bv"], r["n"])
-        for r in stats.where(F.expr(f"n * (n - 1) div 2 > {tau}")).collect()
-    ]
+    heavy = heavy_blocks([(r["bk"], r["bv"], r["n"]) for r in top], total_w, k)
     plan = plan_assignment(heavy, total_w, k, seed)
 
     # --- broadcast the heavy-block assignment; tail blocks get l=1
     # and a hash-derived reducer id (never touches the driver).
-    rows = [
-        (bk, bv, l, rids) for (bk, bv), (l, rids) in plan.multi.items()
-    ] + [(bk, bv, 1, [rid]) for (bk, bv), rid in plan.single_det.items()]
-    if rows:
-        asg = spark.createDataFrame(rows, schema="bk int, bv string, l_ int, rids array<int>")
-        blocked = base.join(F.broadcast(asg), ["bk", "bv"], "left")
+    if plan.multi or plan.single_det:
+        blocked = base.join(F.broadcast(_assignment_table(spark, plan)), ["bk", "bv"], "left")
     else:
         blocked = base.withColumn("l_", F.lit(None).cast("int")).withColumn(
             "rids", F.lit(None).cast("array<int>")

@@ -8,6 +8,8 @@ import math
 import time
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 
 def _timed(fn) -> float:
@@ -20,6 +22,8 @@ from sparklyclean_spark.operators.dedup.blocking import BlockingRule
 from sparklyclean_spark.operators.dedup.pairs import candidate_pairs_naive
 from sparklyclean_spark.operators.dedup.disdedup import (
     candidate_pairs_disdedup,
+    heavy_blocks,
+    heavy_cap,
     plan_assignment,
     triangle_side,
 )
@@ -189,6 +193,26 @@ def test_plan_assignment_deterministic():
         assert len(rids) == l * (l + 1) // 2
         assert len(set(rids)) == len(rids)
     assert p1.reducers_used_by_multi() <= 49
+
+
+@given(data=st.data(), k=st.integers(min_value=2, max_value=200))
+@settings(max_examples=300, deadline=None)
+def test_heavy_blocks_from_top_equals_full_filter(data, k):
+    """The planner collects only the heavy_cap(k) largest blocks and
+    filters them by tau on the driver; that must find exactly the
+    blocks a w > tau filter over ALL blocks finds. Sizes come from a
+    small pool, so many blocks tie, including at the cut, and the
+    order among tied blocks is drawn too."""
+    pool = data.draw(st.lists(st.integers(2, 400), min_size=1, max_size=6))
+    sizes = data.draw(st.lists(st.sampled_from(pool), min_size=1, max_size=400))
+    blocks = [(1 + i % 2, f"v{i}", n) for i, n in enumerate(sizes)]
+    perm = data.draw(st.permutations(range(len(blocks))))
+    top = sorted((blocks[i] for i in perm), key=lambda b: -b[2])[: heavy_cap(k)]
+
+    total = sum(n * (n - 1) // 2 for _, _, n in blocks)
+    tau = total / (3.0 * k * math.log(k)) if k >= 3 else total / k
+    want = sorted(b for b in blocks if b[2] * (b[2] - 1) // 2 > tau)
+    assert sorted(heavy_blocks(top, total, k)) == want
 
 
 def test_jaro_winkler_reference_values(spark):

@@ -3,7 +3,10 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import functions as F
 
 from sparklyclean_spark.datagen import people_df
@@ -34,8 +37,13 @@ def test_labeled_points_shape(labeled):
     assert classes == {0.0, 1.0}
 
 
-def test_train_eval_apply_roundtrip(labeled, tmp_path):
-    model, m = train_dup_classifier(labeled, max_iter=15)
+@pytest.fixture(scope="module")
+def trained(labeled):
+    return train_dup_classifier(labeled, max_iter=15)
+
+
+def test_train_eval_apply_roundtrip(labeled, trained, tmp_path):
+    model, m = trained
     # Dup signal (soc_sec_id/phone levenshtein) is strong: expect solid
     # holdout quality even on the small fixture.
     assert m.tp > 0, m
@@ -54,3 +62,19 @@ def test_train_eval_apply_roundtrip(labeled, tmp_path):
     assert scored.columns == ["id1", "id2", "prediction"]
     n_pred_dup = scored.where(F.col("prediction") == 1.0).count()
     assert n_pred_dup > 0
+
+
+def test_apply_order_and_rows_match_transform(labeled, trained):
+    """The apply contract (reference ``ApplyDupClassifier.scala:74-83``):
+    rows come back in (prediction, id1, id2) order, and they are
+    exactly ``model.transform``'s (id1, id2, prediction) rows."""
+    model, _ = trained
+    unlabeled = labeled.drop("label")
+    got = [tuple(r) for r in apply_dup_classifier(model, unlabeled).collect()]
+    assert got == sorted(got, key=lambda r: (r[2], r[0], r[1]))
+    want = (
+        model.transform(unlabeled.withColumn("features_vec", array_to_vector("features")))
+        .select("id1", "id2", F.col("prediction").cast("double"))
+        .collect()
+    )
+    assert Counter(got) == Counter(tuple(r) for r in want)

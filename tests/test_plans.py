@@ -155,3 +155,43 @@ def test_quantize_stays_jvm_side(t):
     plan = P.explain_formatted(df)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert P.count_exchanges(df) == 0
+
+
+def test_apply_sort_reads_a_hash_exchange(spark):
+    """apply_dup_classifier's range exchange sits directly over a hash
+    exchange on (id1, id2): the range sampler then reads the scored
+    pairs' shuffle stage instead of re-running comparators and GBT."""
+    import re
+
+    from sparklyclean_spark.ml.dup_classifier import (
+        apply_dup_classifier,
+        train_dup_classifier,
+    )
+
+    labeled = spark.createDataFrame(
+        [(f"a{i}", f"b{i}", float(i % 2), [float(i % 2), float(i)]) for i in range(40)],
+        "id1 string, id2 string, label double, features array<double>",
+    )
+    model, _ = train_dup_classifier(labeled, max_iter=2, max_depth=2)
+    plan = P.explain_str(apply_dup_classifier(model, labeled.drop("label")), "simple")
+    lines = plan.splitlines()
+    i = next(n for n, line in enumerate(lines) if "Exchange rangepartitioning" in line)
+    assert re.search(r"\+- Exchange hashpartitioning\(id1#\d+, id2#\d+, \d+\)", lines[i + 1]), plan
+
+
+def test_disdedup_assignment_table_is_jvm_only(spark):
+    """The planner's heavy-block table has no Python RDD in its lineage
+    (a Python-list createDataFrame would run Python-worker tasks), and
+    it holds exactly the plan's rows."""
+    from sparklyclean_spark.operators.dedup.disdedup import (
+        _assignment_table,
+        plan_assignment,
+    )
+
+    heavy = [(2, "nsw", 600), (2, "vic", 400), (1, "3", 120)]
+    plan = plan_assignment(heavy, sum(n * (n - 1) // 2 for *_, n in heavy) + 5000, 49)
+    asg = _assignment_table(spark, plan)
+    assert "PythonRDD" not in asg._jdf.queryExecution().toRdd().toDebugString()
+    want = [(bk, bv, l, rids) for (bk, bv), (l, rids) in plan.multi.items()]
+    want += [(bk, bv, 1, [rid]) for (bk, bv), rid in plan.single_det.items()]
+    assert sorted(tuple(r) for r in asg.collect()) == sorted(want)
